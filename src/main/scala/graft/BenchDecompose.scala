@@ -125,7 +125,7 @@ object BenchDecompose {
       case "scan" =>
         timed("scan_hash") {
           noop(pages.select($"url", $"warc_ts",
-            xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)).as("w_host"),
+            xxhash64(FilterPipeline.hostCol($"url")).as("w_host"),
             xxhash64($"text").as("w_hash")))
         }
       case "kernel" =>
@@ -138,8 +138,7 @@ object BenchDecompose {
       case "dedup" =>
         timed("dedup_only") {
           val keyed = pages.select($"url", $"warc_ts", $"text")
-            .withColumn("w_host",
-              xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+            .withColumn("w_host", xxhash64(FilterPipeline.hostCol($"url")))
             .withColumn("w_hash", xxhash64($"text"))
           val winners = keyed.groupBy($"w_host", $"w_hash")
             .agg(min(struct($"warc_ts", $"url")).as("win"))
@@ -154,8 +153,7 @@ object BenchDecompose {
       case "window" =>
         timed("dedup_window") {
           val keyed = pages.select($"url", $"warc_ts", $"text")
-            .withColumn("w_host",
-              xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+            .withColumn("w_host", xxhash64(FilterPipeline.hostCol($"url")))
             .withColumn("w_hash", xxhash64($"text"))
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy($"w_host", $"w_hash").orderBy($"warc_ts", $"url")
@@ -165,8 +163,7 @@ object BenchDecompose {
       case "ord" =>
         timed("dedup_ord_hashagg") {
           val keyed = pages.select($"url", $"warc_ts", $"text")
-            .withColumn("w_host",
-              xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+            .withColumn("w_host", xxhash64(FilterPipeline.hostCol($"url")))
             .withColumn("w_hash", xxhash64($"text"))
             .withColumn("ord",
               (shiftleft(unix_millis($"warc_ts"), 20)
@@ -179,7 +176,7 @@ object BenchDecompose {
       case "ordplan" =>
         val keyed = pages.select($"url", $"warc_ts", $"text")
           .withColumn("w_host",
-            xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+            xxhash64(FilterPipeline.hostCol($"url")))
           .withColumn("w_hash", xxhash64($"text"))
           .withColumn("ord",
             (shiftleft(unix_millis($"warc_ts"), 20)
@@ -193,8 +190,7 @@ object BenchDecompose {
       case "reuse" =>
         timed("dedup_reuse_exchange") {
           val keyed = pages.select($"url", $"warc_ts", $"text")
-            .withColumn("w_host",
-              xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+            .withColumn("w_host", xxhash64(FilterPipeline.hostCol($"url")))
             .withColumn("w_hash", xxhash64($"text"))
           val parted = keyed.repartition($"w_host", $"w_hash")
           val winners = parted.groupBy($"w_host", $"w_hash")
@@ -206,7 +202,7 @@ object BenchDecompose {
       case "reuseplan" =>
         val keyed = pages.select($"url", $"warc_ts", $"text")
           .withColumn("w_host",
-            xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+            xxhash64(FilterPipeline.hostCol($"url")))
           .withColumn("w_hash", xxhash64($"text"))
         val parted = keyed.repartition($"w_host", $"w_hash")
         val winners = parted.groupBy($"w_host", $"w_hash")

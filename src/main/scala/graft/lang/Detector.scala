@@ -144,6 +144,8 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
     config.languages.foreach(l => a(l) = true)
     a
   }
+  // lookup tables by n-gram size, projected to the configured languages
+  private val tables = model.tablesFor(config.languages)
 
   /** Scratch buffers, one per detector instance. NOT thread-safe: use one
     * Detector per task/partition (cheap; the model itself is shared).
@@ -287,7 +289,7 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
             val key = if (h == 0L) NgramHash.ZeroRemap else h
             if (seens(len).add(key)) {
               probedCount += 1
-              if (probeNgram(model.charTables(len), key)) charHitNgrams += 1
+              if (probeNgram(tables(len), key)) charHitNgrams += 1
             }
           }
           len += 1
@@ -312,7 +314,7 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
       while (wi < tokBuf.nWords) {
         val key = NgramHash.ofWindow(cps, tokBuf.start(wi), tokBuf.len(wi))
         probedCount += 1
-        if (probeNgram(model.wordTable, key)) wordHitNgrams += 1
+        if (probeNgram(tables(5), key)) wordHitNgrams += 1
         wi += 1
       }
       i = 0
@@ -421,7 +423,9 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
     * The "does any candidate appear here" gate is ONE bitmask AND per
     * mask word (ProbTable.anyLangIn) instead of a per-entry candidate
     * check, and the accumulation loop is branch-free: it streams EVERY
-    * posting entry into sums/cnts. Non-candidate slots take writes that
+    * posting entry into sums/cnts. The tables are projected to the
+    * configured languages (PackedModel.tablesFor), so only configured
+    * languages are streamed. Non-candidate slots take writes that
     * are never read (they are re-zeroed each call) — n-grams are
     * script-bound, so postings are dominated by same-script languages
     * that ARE candidates for typical text; trading those few wasted adds

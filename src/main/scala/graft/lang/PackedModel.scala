@@ -169,6 +169,23 @@ final class ProbTable private (
   }
 
   def size: Int = lens.count(_ > 0)
+
+  /** This table restricted to the languages flagged in `keep`: each key
+    * keeps only its kept postings, in the same langId order, and a key
+    * left with none is dropped. Returns `this` when every posting is kept.
+    */
+  def projected(keep: Array[Boolean]): ProbTable = {
+    val kept = keys.indices.filter(keys(_) != 0L)
+      .map(i => keys(i) -> (starts(i) until starts(i) + lens(i)).filter(j => keep(postLangs(j))))
+      .filter(_._2.nonEmpty)
+    val nPost = kept.map(_._2.length).sum
+    if (nPost == postLangs.length) return this
+    val b = new ProbTable.Builder(kept.length, nPost)
+    kept.foreach { case (key, js) =>
+      b.add(key, js.map(postLangs(_).toInt).toArray, js.map(postProbs(_).toDouble).toArray)
+    }
+    b.result()
+  }
 }
 
 object ProbTable {
@@ -298,9 +315,47 @@ final class PackedModel(
   /** total distinct n-gram entries across all tables */
   def entryCount: Long =
     charTables.map(_.size.toLong).sum + wordTable.size.toLong
+
+  /** The six lookup tables indexed by n-gram size (0..4 = uni..five
+    * char-grams, 5 = wordgrams), projected to `languages` (see
+    * ProbTable.projected). A detector reads only its configured
+    * languages' postings, so probing the projection is exact: a candidate
+    * gets the same adds in the same order, and a slot has a candidate
+    * posting in the projection iff it has one in the full table. A set
+    * that covers every modeled language gets the model's own tables.
+    * Other sets are built once per JVM and memoized, LRU-bounded.
+    */
+  def tablesFor(languages: Set[Int]): Array[ProbTable] = {
+    val key = modeledLangs.iterator.filter(languages.contains).toSet
+    if (key.size == modeledLangs.length) ownTables
+    else projections.synchronized {
+      var t = projections.get(key)
+      if (t == null) {
+        val keep = new Array[Boolean](nLangs)
+        key.foreach(keep(_) = true)
+        t = ownTables.map(_.projected(keep))
+        projections.put(key, t)
+        projectionsBuilt += 1
+      }
+      t
+    }
+  }
+
+  @transient private lazy val ownTables: Array[ProbTable] = charTables :+ wordTable
+  @transient private lazy val projections =
+    new java.util.LinkedHashMap[Set[Int], Array[ProbTable]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Set[Int], Array[ProbTable]]): Boolean =
+        size() > PackedModel.MaxProjections
+    }
+  /** projections built by this JVM's copy of the model (tests read it) */
+  @transient private var projectionsBuilt = 0
+  def projectionStats: (Int, Int) = projections.synchronized((projections.size, projectionsBuilt))
 }
 
 object PackedModel {
+  /** Bound on memoized language projections per model copy. */
+  val MaxProjections = 8
+
   /** Version hash: registry size + codes, like the reference's
     * `ScriptLanguage::HASH` layout check (src/detector/storage.rs:124-126).
     */

@@ -145,11 +145,13 @@ object Relational {
     * per-side distincts: in-both ⇔ intersect member, p-only ⇔ except
     * member, every join row ⇔ one distinct union member. The
     * three-branch shape scanned lineitem and part three times each and
-    * ran three distinct-shuffles; this is one scan + one distinct
-    * exchange per side (whose hash partitioning the join then reuses),
-    * and the three output rows are unpivoted from the single aggregate
-    * row. Distinct sides make the join 1:1, so no multiplicity is
-    * introduced.
+    * ran three distinct-shuffles; this is one scan per side and two
+    * exchanges per side: the distinct's `hashpartitioning(k)` and the
+    * null-safe join's `hashpartitioning(coalesce(k, 0), isnull(k))`,
+    * which does not reuse it (plans/r10/q09_set_ops_after.txt, (4)/(6)
+    * and (11)/(13)). The three output rows are unpivoted from the single
+    * aggregate row. Distinct sides make the join 1:1, so no multiplicity
+    * is introduced.
     */
   def q09SetOps(spark: SparkSession, sfDir: String): DataFrame = {
     val liD = Tables.lineitem(spark, sfDir).select(col("l_partkey").as("k"))

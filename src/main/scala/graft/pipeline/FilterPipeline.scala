@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.lang.{Detector, DetectorConfig, PackedModel, ScriptLang}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The web-scale quality-filter pipeline (BASELINE.json north_star):
@@ -53,7 +53,8 @@ object FilterPipeline {
       minCoverage: Double = 0.2
   )
 
-  val toxicityRe = "\\b(idiot|stupid|moron|scum)\\b"
+  private val toxicWords = Array("idiot", "stupid", "moron", "scum")
+  val toxicityRe: String = toxicWords.mkString("\\b(", "|", ")\\b")
 
   // Precompiled once per JVM: compiling per document was the dominant cost
   // of the scrub stage (java.util.regex.Pattern.compile per call).
@@ -63,28 +64,65 @@ object FilterPipeline {
   @transient private lazy val toxP = java.util.regex.Pattern.compile(toxicityRe)
 
   def scrub(text: String): String = {
-    // fast path: the regex engine only runs when a trigger char is present
+    // Each pass runs the regex only when its trigger is present, and starts
+    // it at the first index where a match can start (see replaceFrom).
     var out = text
-    if (out.indexOf('@') >= 0) out = emailP.matcher(out).replaceAll("<EMAIL>")
-    var hasDigit = false
+    // an email match is a [A-Za-z0-9._%+-] run, then '@': none can start
+    // before the run that ends at the first '@'
+    var from = out.indexOf('@')
+    if (from >= 0) {
+      while (from > 0 && isEmailLocal(out.charAt(from - 1))) from -= 1
+      out = replaceFrom(emailP, out, from, "<EMAIL>")
+    }
+    // an IP match starts with a digit, a phone match with a digit or '+'
+    from = firstDigit(out, orPlus = false)
+    if (from >= 0) {
+      out = replaceFrom(ipP, out, from, "<IP>")
+      from = firstDigit(out, orPlus = true)
+      if (from >= 0) out = replaceFrom(phoneP, out, from, "<PHONE>")
+    }
+    // toxicity: indexOf of the four literals is JIT-intrinsified and finds
+    // every \b-bounded match's start, so the smallest hit is where the
+    // regex starts (none: skip it)
+    from = Int.MaxValue
+    var w = 0
+    while (w < toxicWords.length) {
+      val i = out.indexOf(toxicWords(w))
+      if (i >= 0 && i < from) from = i
+      w += 1
+    }
+    if (from < Int.MaxValue) replaceFrom(toxP, out, from, "<TOX>") else out
+  }
+
+  private def isEmailLocal(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+      c == '.' || c == '_' || c == '%' || c == '+' || c == '-'
+
+  /** index of the first ASCII digit (or '+', with `orPlus`) in `s`, or -1 */
+  private def firstDigit(s: String, orPlus: Boolean): Int = {
     var i = 0
-    while (i < out.length && !hasDigit) {
-      val c = out.charAt(i); if (c >= '0' && c <= '9') hasDigit = true; i += 1
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if ((c >= '0' && c <= '9') || (orPlus && c == '+')) return i
+      i += 1
     }
-    if (hasDigit) {
-      out = ipP.matcher(out).replaceAll("<IP>")
-      out = phoneP.matcher(out).replaceAll("<PHONE>")
+    -1
+  }
+
+  /** `p.matcher(s).replaceAll(rep)` for a `p` that has no match starting
+    * before `from`. `find(from)` resets the region to the whole input, so
+    * `\b` still sees the character before `from`.
+    */
+  private def replaceFrom(p: java.util.regex.Pattern, s: String, from: Int, rep: String): String = {
+    val m = p.matcher(s)
+    var found = m.find(from)
+    if (!found) return s
+    val sb = new java.lang.StringBuilder(s.length)
+    while (found) {
+      m.appendReplacement(sb, rep)
+      found = m.find()
     }
-    // toxicity gate: the alternation regex scans every char of every doc,
-    // and it was the kernel's one unconditional regex pass (~30% of scrub
-    // time measured at 2.4M docs, BenchKernelParts r10). indexOf of the
-    // four literals is JIT-intrinsified and a STRICT SUPERSET of the
-    // \b-bounded matches, so skipping on miss is byte-exact. The guards
-    // must track `toxicityRe`'s word list.
-    if (out.indexOf("idiot") >= 0 || out.indexOf("stupid") >= 0 ||
-        out.indexOf("moron") >= 0 || out.indexOf("scum") >= 0)
-      toxP.matcher(out).replaceAll("<TOX>")
-    else out
+    m.appendTail(sb).toString
   }
 
   /** Per-document result of the fused map. */
@@ -144,30 +182,46 @@ object FilterPipeline {
     }
   }
 
+  /** The Detector configuration of the pipeline: default sizes over the
+    * generator's languages.
+    */
+  def detectorConfig: DetectorConfig =
+    DetectorConfig.default.copy(languages = PagesGen.pipelineLangs.map(ScriptLang.id).toSet)
+
+  /** Host of a url: the text after the first `://` (the whole url if it
+    * has none), up to the first `/`. The pipeline's one host rule —
+    * `hostCol` states it in SQL for the batch dedup key, and the
+    * streaming dedup keys on `DocResult.host`.
+    */
+  def hostOf(url: String): String = {
+    val p = url.indexOf("://")
+    val from = if (p < 0) 0 else p + 3
+    val end = url.indexOf('/', from)
+    url.substring(from, if (end < 0) url.length else end)
+  }
+
+  /** `hostOf` over a url column, in codegen'd builtins; null ≡ empty url. */
+  def hostCol(url: Column): Column = {
+    val u = coalesce(url, lit(""))
+    val p = instr(u, "://")
+    substring_index(u.substr(when(p > 0, p + 3).otherwise(1), lit(Int.MaxValue)), "/", 1)
+  }
+
   /** The fused per-document kernel: ONE pass computes language + confidence
     * + perplexity proxy (exp(−mean log-prob) of the top candidate —
     * the langram score IS an n-gram LM) + quality features + scrub.
-    * Detector scratch buffers are reused across the partition.
+    * One Kernel per partition: the Detector's scratch buffers and the word
+    * counter are reused across its rows.
     */
-  def processPartition(
-      model: PackedModel,
-      config: DetectorConfig,
-      it: Iterator[(String, java.sql.Timestamp, String)]
-  ): Iterator[DocResult] = {
-    val det = new Detector(model, config)
-    val wordFreq = new LongIntCounter(512)
-    it.map { case (url, ts, text) => processDoc(model, det, wordFreq, url, ts, text) }
-  }
+  final class Kernel(model: PackedModel, config: DetectorConfig) {
+    private val det = new Detector(model, config)
+    private val wordFreq = new LongIntCounter(512)
 
-  private def processDoc(
-      model: PackedModel,
-      det: Detector,
-      wordFreq: LongIntCounter,
-      url: String,
-      ts: java.sql.Timestamp,
-      text0: String
-  ): DocResult = {
-    {
+    /** One row. A duplicate (`isDup`) skips detection, features and scrub:
+      * at crawl scale dups are a third of the corpus, and their winner
+      * carries the processed copy.
+      */
+    def apply(url: String, ts: java.sql.Timestamp, text0: String, isDup: Boolean): DocResult = {
       // null ≡ empty page: the detector guards null itself, but the
       // line-length loop and scrub below index the string directly
       val text = if (text0 == null) "" else text0
@@ -176,6 +230,11 @@ object FilterPipeline {
       // (ts, url) — a null url in DocResult would NPE that comparator on
       // the first tied timestamp (crawls contain both)
       val u = if (url == null) "" else url
+      val host = hostOf(u)
+      if (isDup)
+        return DocResult(u, ts, host, "und", 0.0, Double.MaxValue, 0.0,
+          0, 1.0, 0.0, 0.0, 0, 0, graft.lang.NgramHash.ofString(text), "")
+
       val nRanked = det.detectInPlace(text) // allocation-free result arrays
       val toks = det.tokens // valid until the next detection call
       // language + confidence: reordered pick + softmax relative probability
@@ -238,16 +297,22 @@ object FilterPipeline {
         i += 1
       }
 
-      // PII + toxicity scrub (north_star regex scrubber)
-      val scrubbed = scrub(text)
-
-      val host = u.stripPrefix("https://").stripPrefix("http://").takeWhile(_ != '/')
-
       DocResult(
         u, ts, host, lang, conf, perplexity, coverage, wc, repRatio, avgLen,
         stopwordRatio, nLines, maxLine,
-        graft.lang.NgramHash.ofString(text), scrubbed)
+        graft.lang.NgramHash.ofString(text),
+        scrub(text)) // PII + toxicity scrub (north_star regex scrubber)
     }
+  }
+
+  /** The kernel over a partition of non-duplicate rows. */
+  def processPartition(
+      model: PackedModel,
+      config: DetectorConfig,
+      it: Iterator[(String, java.sql.Timestamp, String)]
+  ): Iterator[DocResult] = {
+    val k = new Kernel(model, config)
+    it.map { case (url, ts, text) => k(url, ts, text, isDup = false) }
   }
 
   /** Skew-defeating repartition on hash(url, salt) — for inputs whose file
@@ -300,16 +365,14 @@ object FilterPipeline {
   ): DataFrame = {
     import spark.implicits._
 
-    val config = DetectorConfig.default.copy(
-      languages = PagesGen.pipelineLangs.map(ScriptLang.id).toSet)
+    val config = detectorConfig
 
     // group keys are 64-bit hashes of (host, text): grouping equality
     // within 64-bit collision bounds; the shuffle and the join probe run
     // on two longs, never on host/text strings
     val keyed = pages
       .select($"url", $"warc_ts", $"text")
-      .withColumn("w_host",
-        xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+      .withColumn("w_host", xxhash64(hostCol($"url")))
       .withColumn("w_hash", xxhash64($"text"))
 
     // cross-row rule: first (by warc_ts, url) copy per (host, content) wins
@@ -322,24 +385,8 @@ object FilterPipeline {
     val mapped = flagged
       .as[(String, java.sql.Timestamp, String, Boolean)]
       .mapPartitions { it =>
-        val det = new Detector(model.value, config)
-        val wordFreq = new LongIntCounter(512)
-        it.map { case (url, ts, text, isDup) =>
-          // duplicates are dropped unconditionally — don't spend the
-          // detection/quality/scrub kernel on them (at crawl scale dups are
-          // a third of the corpus; their winner carries the processed copy)
-          val doc =
-            if (isDup) {
-              // null url ≡ empty url, matching processDoc's convention
-              val u = if (url == null) "" else url
-              val host = u.stripPrefix("https://").stripPrefix("http://")
-                .takeWhile(_ != '/')
-              DocResult(u, ts, host, "und", 0.0, Double.MaxValue, 0.0,
-                0, 1.0, 0.0, 0.0, 0, 0,
-                graft.lang.NgramHash.ofString(if (text == null) "" else text), "")
-            } else processDoc(model.value, det, wordFreq, url, ts, text)
-          (doc, isDup)
-        }
+        val k = new Kernel(model.value, config)
+        it.map { case (url, ts, text, isDup) => (k(url, ts, text, isDup), isDup) }
       }
       .toDF("doc", "is_dup")
       .select($"doc.*", $"is_dup")

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.lang.{DetectorConfig, PackedModel, ScriptLang}
-import graft.pipeline.{FilterPipeline, PagesGen}
+import graft.lang.PackedModel
+import graft.pipeline.FilterPipeline
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,8 +27,7 @@ object StreamingFilter {
       model: Broadcast[PackedModel]
   ): Dataset[FilterPipeline.DocResult] = {
     import spark.implicits._
-    val config = DetectorConfig.default.copy(
-      languages = PagesGen.pipelineLangs.map(ScriptLang.id).toSet)
+    val config = FilterPipeline.detectorConfig
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),

@@ -159,4 +159,100 @@ class DetectorSpec extends AnyFunSuite {
     assert(t.anyLangIn(sXq, Array(0L, 1L))) // bit 64
     assert(!t.anyLangIn(sZw, Array(-1L, -1L))) // id 129 beyond 2 words
   }
+
+  // ---- tables projected to the configured languages (PackedModel.tablesFor)
+
+  private lazy val fixture = graft.train.FixtureCorpus.model
+  private lazy val pipelineLangs = graft.pipeline.FilterPipeline.detectorConfig.languages
+
+  /** A fresh copy of `m` (empty memo); `modeled = Array.empty` makes every
+    * language set count as covering, so its detectors probe the full tables.
+    */
+  private def copyOf(m: PackedModel, modeled: Array[Int]): PackedModel =
+    new PackedModel(m.nLangs, m.charFloors, m.wordgramFloor, m.charTables, m.wordTable,
+      modeled, m.schemaHash, m.stopwordHashes)
+
+  private def postings(t: ProbTable, slot: Int): Seq[(Short, Float)] =
+    (t.starts(slot) until t.starts(slot) + t.lens(slot)).map(j => (t.postLangs(j), t.postProbs(j)))
+
+  test("projected tables hold exactly the configured postings, in order, no empty slots") {
+    val full = fixture.charTables :+ fixture.wordTable
+    val proj = fixture.tablesFor(pipelineLangs)
+    assert(proj.length == 6)
+    full.zip(proj).zipWithIndex.foreach { case ((f, p), size) =>
+      assert(p ne f, s"size $size: an 8-language set must not reuse the full table")
+      var keys = 0
+      f.keys.indices.filter(f.keys(_) != 0L).foreach { slot =>
+        val want = postings(f, slot).filter(x => pipelineLangs.contains(x._1.toInt))
+        val ps = p.find(f.keys(slot))
+        if (want.isEmpty) assert(ps < 0, s"size $size: key without configured postings kept")
+        else {
+          keys += 1
+          assert(ps >= 0 && postings(p, ps) == want, s"size $size slot $slot")
+        }
+      }
+      val stored = p.keys.indices.filter(p.keys(_) != 0L)
+      assert(stored.length == keys && stored.forall(p.lens(_) > 0), s"size $size")
+      assert(p.postLangs.length == stored.map(p.lens(_)).sum, s"size $size: stray postings")
+    }
+    info(f"projected postings: ${proj.map(_.postLangs.length).sum} of ${full.map(_.postLangs.length).sum}")
+  }
+
+  test("sets covering every modeled language reuse the model's own tables") {
+    val m = copyOf(fixture, fixture.modeledLangs)
+    val own = m.charTables :+ m.wordTable
+    Seq(DetectorConfig.default.languages, fixture.modeledLangs.toSet,
+      fixture.modeledLangs.toSet + ScriptLang.id("cja")).foreach { langs =>
+      assert(m.tablesFor(langs).zip(own).forall { case (a, b) => a eq b })
+    }
+    new Detector(m, DetectorConfig.default)
+    assert(m.projectionStats == ((0, 0)), "no projection may be built for covering sets")
+  }
+
+  test("projected detection is exact, including empty, single and unmodeled sets") {
+    val reference = copyOf(fixture, Array.empty)
+    val texts = graft.train.GoldenFixtures.cases.map(_._2).take(200) ++
+      graft.pipeline.PagesGen.generate(300)._1.map(_.text) ++
+      Seq("", "Alter", "ꨕ", "the house of water", "groß")
+    val sets = Seq(Set.empty[Int], Set(ScriptLang.id("eng")), Set(ScriptLang.id("cja")),
+      Set(ScriptLang.id("eng"), ScriptLang.id("deu")), pipelineLangs,
+      pipelineLangs + ScriptLang.id("cja"))
+    sets.foreach { langs =>
+      val cfg = DetectorConfig.default.copy(languages = langs)
+      val (got, want) = (new Detector(fixture, cfg), new Detector(reference, cfg))
+      texts.foreach { t =>
+        val g = got.probabilities(t).map(s => (s.langId, java.lang.Double.doubleToRawLongBits(s.prob)))
+        val w = want.probabilities(t).map(s => (s.langId, java.lang.Double.doubleToRawLongBits(s.prob)))
+        assert(g == w, s"$langs on '$t'")
+        assert(got.lastProbedCount == want.lastProbedCount, s"$langs on '$t'")
+        assert(g.forall(x => got.lastHitCount(x._1) == want.lastHitCount(x._1)), s"$langs on '$t'")
+      }
+    }
+  }
+
+  test("concurrent Detector construction builds one projection") {
+    val m = copyOf(fixture, fixture.modeledLangs)
+    val cfg = DetectorConfig.default.copy(languages = pipelineLangs)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val fs = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Array[ProbTable]] {
+        def call(): Array[ProbTable] = { start.await(); new Detector(m, cfg); m.tablesFor(cfg.languages) }
+      }))
+      start.countDown()
+      val got = fs.map(_.get())
+      assert(got.forall(_ eq got.head))
+    } finally pool.shutdown()
+    assert(m.projectionStats == ((1, 1)))
+  }
+
+  test("the projection memo stays within its bound") {
+    val m = copyOf(fixture, fixture.modeledLangs)
+    val sets = fixture.modeledLangs.take(3 * PackedModel.MaxProjections).map(l => Set(l))
+    sets.foreach { langs =>
+      m.tablesFor(langs)
+      assert(m.projectionStats._1 <= PackedModel.MaxProjections)
+    }
+    assert(m.projectionStats == ((PackedModel.MaxProjections, sets.length)))
+  }
 }

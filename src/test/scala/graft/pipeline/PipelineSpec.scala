@@ -44,6 +44,31 @@ class PipelineSpec extends AnyFunSuite {
     joined.unpersist()
   }
 
+  test("output digest pin: every column of the 2000-page run, byte-exact") {
+    // SHA-256 over the full output sorted by url: every column in schema
+    // order, doubles by raw bits. Pinned from the output of the kernel
+    // before the language-projected tables and the start-at-first-match
+    // scrub, which must not move a single byte.
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def long(x: Long): Unit = md.update(java.nio.ByteBuffer.allocate(8).putLong(x).array())
+    md.update(result.schema.toDDL.getBytes("UTF-8"))
+    result.collect().sortBy(_.getAs[String]("url")).foreach { r =>
+      (0 until r.length).foreach { i =>
+        r.get(i) match {
+          case null => md.update(0: Byte)
+          case s: String => val b = s.getBytes("UTF-8"); long(b.length.toLong); md.update(b)
+          case d: Double => long(java.lang.Double.doubleToRawLongBits(d))
+          case n: Int => long(n.toLong)
+          case n: Long => long(n)
+          case b: Boolean => md.update(if (b) 1: Byte else 2: Byte)
+          case t: java.sql.Timestamp => long(t.getTime); long(t.getNanos.toLong)
+        }
+      }
+    }
+    val hex = md.digest().map("%02x".format(_)).mkString
+    assert(hex == "84b08444a32ee0900514a79d285179e178339a1b7f30ef3a3ba5e22846021404", s"output digest moved: $hex")
+  }
+
   test("null-text pages flow through the full pipeline and are dropped") {
     import spark.implicits._
     val bc = LangOps.broadcastModel(spark)

@@ -17,7 +17,7 @@ class SkewSpec extends AnyFunSuite {
 
   test("salted repartition flattens Zipf host skew; host partitioning does not") {
     val pages = PagesGen.pagesDf(spark, 4000)
-      .withColumn("host", substring_index(substring_index(col("url"), "://", -1), "/", 1))
+      .withColumn("host", FilterPipeline.hostCol(col("url")))
 
     def partitionSizes(df: org.apache.spark.sql.DataFrame): Array[Long] =
       df.withColumn("pid", spark_partition_id())

@@ -38,6 +38,48 @@ class StreamingSpec extends AnyFunSuite {
     assert(diff == 0L, s"$diff keep-decision mismatches between streaming and batch")
   }
 
+  test("batch and streaming dedup share one host rule") {
+    import spark.implicits._
+    import graft.pipeline.FilterPipeline
+    assert(FilterPipeline.hostOf("https://a.example/r?u=http://b.example/x") == "a.example")
+    assert(FilterPipeline.hostOf("HTTP://a.example/1") == "a.example")
+    assert(FilterPipeline.hostOf("a.example/1") == "a.example")
+    assert(FilterPipeline.hostOf("") == "")
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-h").toString
+    val pagesDir = s"$tmp/pages"
+    val bc = LangOps.broadcastModel(spark)
+    def page(url: String, hour: Int, text: String) = PagesGen.Page(
+      url, java.sql.Timestamp.valueOf(java.time.LocalDateTime.of(2025, 6, 1, hour, 0, 0)),
+      PagesGen.wrapHtml(url, text), text, "eng")
+    val body = ("the house of water and world people time year good know " * 5).trim
+    spark.createDataset(Seq(
+      // the last "://" names another host: not the same host as the next page
+      page("https://a.example/r?u=http://b.example/x", 1, body),
+      page("https://b.example/y", 2, body),
+      // scheme case and a missing scheme do not change the host
+      page("HTTP://c.example/1", 1, body + " again"),
+      page("http://c.example/2", 2, body + " again"),
+      page("c.example/3", 3, body + " again"))).write.parquet(pagesDir)
+
+    val q = StreamingFilter.start(spark, pagesDir, bc, "stream_hosts", s"$tmp/ckpt")
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.table("stream_hosts")
+      .select($"url", $"drop_reason" <=> "dup", $"host", FilterPipeline.hostCol($"url"))
+      .as[(String, Boolean, String, String)].collect()
+    val batch = FilterPipeline.run(spark, spark.read.parquet(pagesDir), bc)
+      .select($"url", $"is_dup", $"host", FilterPipeline.hostCol($"url"))
+      .as[(String, Boolean, String, String)].collect()
+
+    val dups = Set("http://c.example/2", "c.example/3")
+    assert(batch.filter(_._2).map(_._1).toSet == dups)
+    assert(streamed.map(r => r._1 -> r._2).toMap == batch.map(r => r._1 -> r._2).toMap)
+    (streamed ++ batch).foreach { case (url, _, host, dedupHost) =>
+      assert(host == dedupHost && host == FilterPipeline.hostOf(url), url)
+    }
+  }
+
   test("dedup state expires on the event-time horizon (bounded state store)") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-t").toString
