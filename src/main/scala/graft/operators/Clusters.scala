@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -32,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   *    whole component as one group;
   *  - per-iteration state is a per-call-owned RDD pin (MEMORY_AND_DISK),
   *    previous iteration released as soon as the next is materialized —
-  *    the q19 pin discipline (TextOps.lastQ19Cache scaladoc).
+  *    the q19 pin discipline (PinSlot scaladoc).
   */
 object Clusters {
 
@@ -44,19 +44,10 @@ object Clusters {
     * (cluster_id = own doc_id, keep = true).
     */
   def q39NearDupClusters(
-      spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame = {
-    val pairs = TextOps.q17MinHashPairs(spark, sfDir, threshold)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val labels = connectedComponents(spark, pairs)
-    Tables.documents(spark, sfDir).select(col("doc_id"))
-      .join(
-        labels.select(col("node").as("doc_id"), col("label").as("cid")),
-        Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("cid"), col("doc_id")).as("cluster_id"),
-        (col("doc_id") === coalesce(col("cid"), col("doc_id"))).as("keep"))
-  }
+      spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame =
+    labelledDocs(spark, sfDir, threshold)
+      .select(col("doc_id"), col("cluster_id"),
+        (col("doc_id") === col("cluster_id")).as("keep"))
 
   /** Quality-aware canonical selection over the q39 clusters: real
     * pipelines keep the BEST member of a near-dup cluster (the longest
@@ -69,53 +60,51 @@ object Clusters {
     * bounded). A null-text singleton keeps itself (rank 1 of 1).
     *
     * The word count rides the SAME documents scan + left label join
-    * that assigns cluster ids (the q39 label-attach shape with one
-    * extra projected column) rather than a second documents scan
-    * joined back on doc_id: doc_id is the table key, so attaching wc
-    * via a second inner self-join is row-for-row the one-pass
-    * projection — one full corpus scan and one corpus-sized join
-    * where there were two of each.
+    * that assigns cluster ids (`labelledDocs` with one extra projected
+    * column) rather than a second documents scan joined back on doc_id:
+    * doc_id is the table key, so attaching wc via a second inner
+    * self-join is row-for-row the one-pass projection — one full corpus
+    * scan and one corpus-sized join where there were two of each.
     */
   def q40CanonicalKeep(
       spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame = {
-    val pairs = TextOps.q17MinHashPairs(spark, sfDir, threshold)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val labels = connectedComponents(spark, pairs)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster_id"))
       .orderBy(col("word_count").desc_nulls_last, col("doc_id").asc)
-    Tables.documents(spark, sfDir)
-      .select(
-        col("doc_id"),
+    labelledDocs(spark, sfDir, threshold,
         size(split(col("text"), " ")).cast("long").as("word_count"))
-      .join(
-        labels.select(col("node").as("doc_id"), col("label").as("cid")),
-        Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("cid"), col("doc_id")).as("cluster_id"),
-        col("word_count"))
       .withColumn("rk", row_number().over(w))
       .select(col("doc_id"), col("cluster_id"), col("word_count"),
         (col("rk") === 1).as("keep"))
   }
 
+  /** (doc_id, `extra`..., cluster_id) for EVERY document: the q17
+    * pairs' connected components left-joined onto one documents scan
+    * that projects doc_id plus the caller's `extra` columns (each a
+    * named expression over the documents table), with cluster_id = the
+    * component label, or the doc's own id for a doc in no pair.
+    */
+  private def labelledDocs(
+      spark: SparkSession, sfDir: String, threshold: Double, extra: Column*): DataFrame = {
+    val pairs = TextOps.q17MinHashPairs(spark, sfDir, threshold)
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+    val labels = connectedComponents(spark, pairs)
+    Tables.documents(spark, sfDir).select(col("doc_id") +: extra: _*)
+      .join(
+        labels.select(col("node").as("doc_id"), col("label").as("cid")),
+        Seq("doc_id"), "left")
+      .withColumn("cluster_id", coalesce(col("cid"), col("doc_id")))
+      .drop("cid")
+  }
+
   /** Last q39 star-forest pin — released by the NEXT call's swap (the
     * lazy result plan reads it after this call returns) or eagerly via
-    * [[releaseQ39Cache]]. Same per-call-owned plain-RDD discipline as
-    * TextOps.lastQ19Cache (see that scaladoc for why a Dataset cache is
-    * the wrong tool): a post-release recompute re-runs the iteration
-    * chain storage-free — correct, just unpinned.
+    * [[releaseQ39Cache]]; see [[PinSlot]]. A post-release recompute
+    * re-runs the iteration chain storage-free — correct, just unpinned.
     */
-  private val lastQ39Cache =
-    new java.util.concurrent.atomic.AtomicReference[RDD[_]](null)
+  private val lastQ39Cache = new PinSlot
 
-  private[graft] def releaseQ39Cache(): Unit = {
-    val prev = lastQ39Cache.getAndSet(null)
-    if (prev != null) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  private[graft] def releaseQ39Cache(): Unit = lastQ39Cache.release()
 
   /** Upper bound on alternation rounds before declaring non-convergence.
     * The paper's bound is O(log² n) — low single digits in practice
@@ -207,21 +196,14 @@ object Clusters {
       lastRounds.set(rounds)
     } catch {
       case t: Throwable =>
-        Seq(curr, ls, next).foreach { r =>
-          if (r != null) {
-            try r.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
+        Seq(curr, ls, next).foreach(PinSlot.unpersist)
         throw t
     }
 
     // handoff: the converged star pin backs the lazy result plan; swap it
     // into the registry so the next q39 call (or an eager release)
     // retires it — never more than one live pin for this operator
-    val prev = lastQ39Cache.getAndSet(curr)
-    if (prev != null && (prev ne curr)) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
+    lastQ39Cache.swap(curr)
 
     val pinned = curr
     // the centers distinct is bounded by the (converged) edge count, so it

@@ -798,29 +798,15 @@ object TextOps {
   final val HotGramBlock = 4096L
 
   /** Last q19 shingle cache — released by the NEXT q19 call (the lazy
-    * result plan needs it alive after q19Stages returns). Holds a PLAIN
-    * RDD, not a cached Dataset: a Dataset cache is keyed by canonicalized
-    * plan, shared across concurrent same-input calls, and releasing it
-    * while a sibling's retained InMemoryTableScan can still execute
-    * strands an unreachable rebuilt copy (CachedRDDBuilder re-persists
-    * after clearCache; the CacheManager entry is gone, so no later
-    * unpersist finds it — caught by ConcurrentHandoffSpec). An RDD
-    * persist is per-call-owned and its unpersist terminal: a post-release
-    * recompute runs storage-free instead of re-registering.
+    * result plan needs it alive after q19Stages returns); see [[PinSlot]].
     */
-  private val lastQ19Cache =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
+  private val lastQ19Cache = new PinSlot
 
   /** Release the swapped-in shingle cache eagerly (tests and
     * BenchDecompose; a sequential caller normally leaves it to the next
     * q19 call's swap).
     */
-  private[graft] def releaseQ19Cache(): Unit = {
-    val prev = lastQ19Cache.getAndSet(null)
-    if (prev != null) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  private[graft] def releaseQ19Cache(): Unit = lastQ19Cache.release()
 
   private[graft] def q19Stages(spark: SparkSession, sfDir: String, threshold: Double): JaccardStages =
     q19StagesFromDocs(
@@ -918,7 +904,7 @@ object TextOps {
     // measured this query at 4× its quiet cost). At warehouse scale the
     // same reuse is a checkpointed intermediate table; the storage level
     // spills to disk so the cache never OOMs a task. The pin is a PLAIN
-    // RDD behind a LogicalRDD barrier (see lastQ19Cache): per-call-owned,
+    // RDD behind a LogicalRDD barrier (see PinSlot): per-call-owned,
     // terminally releasable, safe against a concurrent sibling's swap.
     val ownPin =
       new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
@@ -935,13 +921,7 @@ object TextOps {
       // One cache may outlive this call (the returned plan is lazy), but
       // never more than one: each call releases the previous call's cache
       // (ADVICE r4 — Verify dumping all queries used to accumulate them).
-      val prev = lastQ19Cache.getAndSet(r)
-      // best-effort: prev may belong to a STOPPED context (test teardown,
-      // driver restart) whose block manager refuses the call — the new
-      // context owes nothing to those blocks
-      if (prev != null && (prev ne r)) {
-        try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-      }
+      lastQ19Cache.swap(r)
       spark.createDataset(r).toDF("source", "doc_id", "shingles")
     }
 
@@ -1161,12 +1141,7 @@ object TextOps {
       if (smallGroups) localResult else distResult, usedLocalPlan = smallGroups,
       usedApproxDfOrder = () => approxOrderUsed,
       approxOrderTailDfBound = () => approxTailDfBound,
-      releaseOwnPin = () => {
-        val r = ownPin.get
-        if (r != null && lastQ19Cache.compareAndSet(r, null)) {
-          try r.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-        }
-      })
+      releaseOwnPin = () => lastQ19Cache.releaseIf(ownPin.get))
   }
 
   /** Document fingerprint, winnowing flavor: whole-content hash + the

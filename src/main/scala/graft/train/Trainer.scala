@@ -156,23 +156,15 @@ object Trainer {
 
   /** Last trainer gram-count pin — released by the NEXT trainer call
     * (the lazy result plan needs it alive after trainSparkFractions
-    * returns); same per-call-owned plain-RDD discipline as
-    * TextOps.lastQ19Cache, and for the same reasons (terminal
-    * unpersist, no cross-call CacheManager sharing).
+    * returns); see [[graft.operators.PinSlot]].
     */
-  private val lastTrainerCache =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
+  private val lastTrainerCache = new graft.operators.PinSlot
 
   /** Eager release of the swapped-in gram-count pin (tests, dump-all
     * settles); a sequential caller normally leaves it to the next
     * trainer call's swap.
     */
-  private[graft] def releaseTrainerCache(): Unit = {
-    val prev = lastTrainerCache.getAndSet(null)
-    if (prev != null) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  private[graft] def releaseTrainerCache(): Unit = lastTrainerCache.release()
 
   def trainSparkFractions(
       spark: SparkSession,
@@ -228,10 +220,7 @@ object Trainer {
     val countsRdd = grams.groupBy($"lang", $"size", $"ngram").count()
       .as[(String, Int, String, Long)].rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prev = lastTrainerCache.getAndSet(countsRdd)
-    if (prev != null && (prev ne countsRdd)) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
+    lastTrainerCache.swap(countsRdd)
     val counts = spark.createDataset(countsRdd).toDF("lang", "size", "ngram", "count")
 
     // totals per (lang,size) for size 1 and 0 denominators

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.control.NonFatal
 
 /** Chaos gate for the RDD-pinned intermediates (VERDICT r7 #3): the
-  * recompute-after-eviction claims in TextOps.lastQ19Cache and
-  * Relational's escalated-path vcRdd block were prose until this spec.
+  * recompute-after-eviction claims in TextOps' q19 shingle-cache pin and
+  * (before r10 removed it) q32's value-counts pin were prose until this
+  * spec.
   * Two chaos flavors run against each pin MID-QUERY from a second
   * thread:
   *
@@ -154,7 +155,7 @@ class BlockEvictionSpec extends AnyFunSuite {
       s"terminal unpersist re-registered a pin on recompute: $reRegistered")
   }
 
-  // ---- q32 escalated-path value-counts pin ------------------------------
+  // ---- q32: no storage pin -----------------------------------------------
 
   private def writeLineitem(): String = {
     import spark.implicits._
@@ -179,8 +180,8 @@ class BlockEvictionSpec extends AnyFunSuite {
       .sortBy(_._1).toList
 
   test("q32 escalated path stays exact under chaos and holds zero storage pins") {
-    // r10: the escalated path's value-counts pin is GONE by construction
-    // (raw-row range shuffle; totals ride the offset broadcast), so the
+    // r10: q32's value-counts pin is GONE by construction (raw-row
+    // range shuffle; totals ride the offset broadcast), so the
     // old evict-the-pin race has nothing to catch. What remains worth
     // gating: the build+result sequence stays exact while the chaos
     // thread runs (it can still evict unrelated blocks / stress the
@@ -189,18 +190,16 @@ class BlockEvictionSpec extends AnyFunSuite {
     // impossible rather than correctly-released.
     val dir = writeLineitem()
     try {
-      val expected = q32Rows(Relational.q32Stages(spark, dir, escalateBytes = Long.MaxValue).result)
+      val expected = q32Rows(Q32Reference.percentiles(spark, dir))
       (0 until 6).foreach { round =>
         val before = persistedIds()
         val chaos = new Chaos(before, terminal = round % 2 == 0)
         try {
-          val st = Relational.q32Stages(spark, dir, escalateBytes = -1L)
-          assert(st.escalated)
-          assert(q32Rows(st.result) == expected,
-            s"q32 escalated diverged under chaos (round $round)")
+          assert(q32Rows(Relational.q32Stages(spark, dir).result) == expected,
+            s"q32 diverged under chaos (round $round)")
         } finally chaos.shutdown()
         val leaked = newIdsSettled(before)
-        assert(leaked.isEmpty, s"q32 escalated registered a pin (round $round): $leaked")
+        assert(leaked.isEmpty, s"q32 registered a pin (round $round): $leaked")
       }
     } finally graft.TinyInputs.delete(dir)
   }

@@ -7,17 +7,16 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 /** Concurrent-call gate for the operators that pin intermediates
-  * (q19's cross-call shingle-cache handoff, q32's escalated-path
-  * value-counts pin). The pins are PLAIN per-call-owned RDD persists,
-  * never Dataset caches: a Dataset cache is keyed by canonicalized
-  * plan, so concurrent SAME-INPUT calls share one CacheManager entry
-  * and the first finisher's release strands a lazily re-persisted copy
-  * no later unpersist can find — this gate caught exactly that. Any
-  * interleaving of concurrent calls must (a) keep every call's result
-  * exact — q19's sibling swap may release the cache a lazy plan was
-  * built over, which is a recompute, never a value change — and
-  * (b) strand nothing: q32's escalated path keeps ZERO cross-call
-  * state (its pin is terminally released inside the call), and q19's
+  * (q19's cross-call shingle-cache handoff; q32, which must hold none).
+  * The pins are PLAIN per-call-owned RDD persists, never Dataset
+  * caches: a Dataset cache is keyed by canonicalized plan, so
+  * concurrent SAME-INPUT calls share one CacheManager entry and the
+  * first finisher's release strands a lazily re-persisted copy no later
+  * unpersist can find — this gate caught exactly that. Any interleaving
+  * of concurrent calls must (a) keep every call's result exact — q19's
+  * sibling swap may release the cache a lazy plan was built over, which
+  * is a recompute, never a value change — and (b) strand nothing: q32
+  * keeps ZERO cross-call state (no storage pin at all), and q19's
   * getAndSet chain releases exactly what it replaced, so at most the
   * last swapped-in shingle cache survives until the settle release.
   * At crawl scale these operators run from long-lived multi-tenant
@@ -62,7 +61,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
     finally pool.shutdown()
   }
 
-  // ---- q32: escalated-path caches (vc + ranged) ------------------------
+  // ---- q32: no cross-call state ----------------------------------------
 
   private def writeLineitem(variant: Int): String = {
     import spark.implicits._
@@ -89,10 +88,10 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
   test("concurrent escalated q32 calls stay exact and strand no cache") {
     val dirs = (0 until 4).map(writeLineitem)
     try {
-      // expected per dir from the DEFAULT path (also cross-checks the two
-      // paths agree on fresh data); MaxValue forces it
+      // expected per dir from the independent reference plan (also
+      // cross-checks the two plans agree on fresh data)
       val expected = dirs.map { d =>
-        d -> q32Rows(Relational.q32Stages(spark, d, escalateBytes = Long.MaxValue).result)
+        d -> q32Rows(Q32Reference.percentiles(spark, d))
       }.toMap
       val before = persistedIds()
 
@@ -100,9 +99,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
         val futs = (0 until 8).map { i =>
           val d = dirs(i % dirs.length)
           Future {
-            val st = Relational.q32Stages(spark, d, escalateBytes = -1L)
-            assert(st.escalated, "forced escalation must take the prefix-sum path")
-            d -> q32Rows(st.result)
+            d -> q32Rows(Relational.q32Stages(spark, d).result)
           }
         }
         Await.result(Future.sequence(futs), 5.minutes)
@@ -111,8 +108,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
         assert(rows == expected(d), s"concurrent escalated q32 diverged on $d")
       }
 
-      // no settle call: the escalated path keeps ZERO cross-call state —
-      // every pin is terminally released inside the call, so nothing may
+      // no settle call: q32 keeps ZERO cross-call state, so nothing may
       // remain persisted once the futures have all returned
       val leaked = newIdsSettled(before)
       assert(leaked.isEmpty, s"stranded q32 caches (RDD ids): $leaked")

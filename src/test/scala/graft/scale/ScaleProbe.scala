@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
   * distributed corpora (per-row splitmix64 — no cross-partition RNG
   * state, no driver materialization) and drives:
   *
-  *  - q32 over 6M- and 60M-row lineitem twins (10×/100× sf0.1; the
-  *    4 MiB escalation threshold is exceeded by both, so the
-  *    range-partitioned prefix-sum path carries them). Exactness is
+  *  - q32 over 6M- and 60M-row lineitem twins (10×/100× sf0.1,
+  *    through the range-partitioned prefix sum). Exactness is
   *    checked OUT-OF-BAND by tools/scale_q32_oracle.py (DuckDB
   *    quantile_cont over the same parquet).
   *  - q17 (global 0.7) and q19 (within-source 0.3) over a 2.4M-doc
@@ -212,7 +211,6 @@ object ScaleProbe {
           println(s"PROBE gen done docs=$nDocs lineitem=$nLi")
         case "q32" =>
           val stages = graft.operators.Relational.q32Stages(spark, dir)
-          println(s"PROBE q32 escalated=${stages.escalated}")
           val t0 = System.nanoTime()
           val rows = stages.result.collect()
           val dt = (System.nanoTime() - t0) / 1e9

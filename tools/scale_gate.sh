@@ -11,7 +11,7 @@
 #  - q19 (within-source 0.3): same audit, per-source;
 #  - q39 (cluster resolution): every doc's label compared against a
 #    driver union-find over the collected (q17-audited) pair set;
-#  - q32: escalated percentile path, checked value-exact against a
+#  - q32: range-partitioned percentile path, checked value-exact against a
 #    DuckDB quantile_cont oracle (tools/scale_q32_oracle.py).
 #
 # The 100x/20M tiers (multi-GB shuffles, -Xmx24g direct-java launches)
@@ -45,10 +45,10 @@ sbt -batch "Test/runMain graft.scale.ScaleProbe q39 $DIR" \
   > "$WORK/q39.log" 2>&1
 grep -E "PROBE q39" "$WORK/q39.log"
 
-echo "== q32 at 10x (escalated path vs DuckDB quantile oracle) =="
+echo "== q32 at 10x (prefix-sum path vs DuckDB quantile oracle) =="
 sbt -batch "Test/runMain graft.scale.ScaleProbe q32 $DIR" \
   > "$WORK/q32.log" 2>&1
-grep -E "PROBE q32 (escalated|rows)" "$WORK/q32.log"
+grep -E "PROBE q32 rows" "$WORK/q32.log"
 python3 tools/scale_q32_oracle.py "$DIR"
 
 echo "SCALE GATE PASS (10x tier)"
